@@ -83,9 +83,7 @@ object Ccm {
         spec.numSamples,
         spec.embeddingDim,
         spec.knnBuckets,
-        spec.knnAutoFactor,
-        spec.reuseDistances,
-        spec.fusedTopK
+        spec.knnAutoFactor
       )
     // Convergence as a WINDOW aggregate over the skill rows (identical values
     // to the groupBy form in [[CcmPipeline.convergence]]) — a join against a

@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   *    `row_number <= k` to a per-partition TopK via WindowGroupLimit)
   *  - weights + prediction  (`lib/ccm.ex:142-177,246-262`) = partition-min
   *    analytic + weighted-average aggregate
-  *  - skill                 (`lib/ccm.ex:187-213`) = `corr` aggregate
+  *  - skill                 (`lib/ccm.ex:187-213`) = guarded co-moment
+  *    Pearson aggregate ([[Knn.pearsonOr0]])
   *  - convergence           (`lib/ccm.ex:215-244`) = `regr_slope` aggregate
   *
   * Scale notes (100 TB): all shuffles key on the series id, so work
@@ -71,8 +72,8 @@ object CcmPipeline {
     * `explode(array(structXcY, structYcX))` splits rows per direction —
     * exactly the union's row multiset (`x_causes_y` embeds Y targets X,
     * `lib/ccm.ex:49-53`), with one Sort and one Window pass. Generator +
-    * top-level filter keep whole-stage codegen (the reusePairs lesson:
-    * higher-order filter() is interpreted-only).
+    * top-level filter keep whole-stage codegen (a higher-order filter()
+    * is interpreted-only and would eject the stage from codegen).
     */
   def embeddedBoth(
       df: DataFrame,
@@ -164,12 +165,9 @@ object CcmPipeline {
       e: Int,
       knnBuckets: Int = 0,
       knnAutoFactor: Int = 64,
-      reuseDistances: Boolean = false,
-      fusedTopK: Boolean = false,
       orderFreeFold: Boolean = false
   ): DataFrame = {
     val spark = rankedDf.sparkSession
-    graft.functions.GraftFunctions.register(spark) // graft_exp weight kernel
     import spark.implicits._
     val k = keys.map(col)
     val libs = broadcast(libSizes.toDF("lib_size"))
@@ -236,16 +234,8 @@ object CcmPipeline {
     // single time per pair and the lib-size dimension is attached AFTERWARDS
     // with cheap range predicates (an |libSizes|-fold reduction in distance
     // evaluations and join output vs fanning out before the join).
-    val joinCondBase = keys
-      .map(kn => col(s"q.$kn") === col(s"l.$kn"))
-      .reduce(_ && _) && $"q.sample_id" === $"l.sample_id" &&
+    val joinCondBase = $"q.sample_id" === $"l.sample_id" &&
       $"l.rank" < $"q.rank" && $"l.rank" <= lit(maxLib.toLong)
-    val dims = 0 until e
-    val distExpr = sqrt(
-      dims
-        .map(j => (col(s"q.e$j") - col(s"l.e$j")) * (col(s"q.e$j") - col(s"l.e$j")))
-        .reduce(_ + _)
-    )
     def pairSelect(joined: DataFrame): DataFrame =
       joined.select(
         (keys.map(kn => col(s"q.$kn").as(kn)) ++ Seq(
@@ -256,95 +246,11 @@ object CcmPipeline {
           $"q.tgt".as("actual"),
           $"l.idx".as("lib_idx"),
           $"l.tgt".as("lib_tgt"),
-          distExpr.as("dist")
+          Knn.dist(Knn.coords(e)).as("dist")
         )): _*
       )
     def exactPairs(rel: DataFrame): DataFrame =
-      pairSelect(
-        rel.as("q").filter($"q.rank" > lit(minLib.toLong)).join(rel.as("l"), joinCondBase)
-      )
-
-    // Distance-reuse across bootstrap samples (SURVEY §4 item 2;
-    // CcmSpec.reuseDistances). The exact join above evaluates each
-    // (q_idx, l_idx) distance once per SAMPLE though it depends only on
-    // the point pair. Here the join is keyed on (series, q_idx, l_idx)
-    // alone — distance computed ONCE — and every point carries its
-    // per-sample rank ARRAY (one groupBy over the ranked relation; the
-    // embedding coordinates are sample-invariant so `first` is
-    // value-deterministic). Per-sample membership is then expanded
-    // IN-STAGE after the join — explode(sequence(1, S)) + element_at +
-    // the same rank predicates — so reuse adds zero shuffles; a first
-    // cut that joined two narrow per-sample rank relations back onto the
-    // pair relation was 3x SLOWER than recomputing (two extra shuffles
-    // of the inflated pair relation dwarf the saved arithmetic — in
-    // Spark, row movement dominates a per-row sqrt). Across-sample rank
-    // extremes pre-prune the sides (a point can be a library point in
-    // SOME sample only if min_s rank <= maxLib; a query point only if
-    // max_s rank > minLib). Output rows are identical to exactPairs —
-    // same distance expression over the same doubles, same membership
-    // predicates — so both paths share one oracle. Measured OUTCOME
-    // (graft.tools.BootProbe, S=8/32, libs far from and near n): 1.1-1.5x
-    // slower than recomputing — candidate-row enumeration (S·n per cell
-    // through join or generator, identical in both paths) dominates, the
-    // E-dim distance is ~free inside whole-stage codegen, and this path
-    // additionally carries two S-element rank arrays through every
-    // generated row. Kept opt-in as the honest record of SURVEY §4 item
-    // 2: in this engine candidate-count reduction (knnBuckets) pays;
-    // arithmetic reuse does not (see CcmSpec.reuseDistances scaladoc).
-    def reusePairs(rel: DataFrame): DataFrame = {
-      val kCols = keys.map(col)
-      val rankArr = transform(
-        array_sort(collect_list(struct($"sample_id", $"rank"))),
-        x => x.getField("rank")
-      )
-      // explicit-width repartition on the series keys: same AQE hazard as
-      // the exact path above — the self-join + explode inflates this
-      // relation n·S-fold, so post-shuffle coalescing by pre-join bytes
-      // would serialize the distance/top-k stage
-      val aggCols = dims.map(j => first(col(s"e$j")).as(s"e$j")) ++ Seq(
-        first($"tgt").as("tgt"),
-        rankArr.as("rank_arr")
-      )
-      val embR = rel
-        .groupBy((kCols :+ col("idx")): _*)
-        .agg(aggCols.head, aggCols.tail: _*)
-        .repartition(spark.sessionState.conf.numShufflePartitions, kCols: _*)
-      val qSide = embR.filter(array_max($"rank_arr") > lit(minLib.toLong))
-      val lSide = embR.filter(array_min($"rank_arr") <= lit(maxLib.toLong))
-      val pairCond = keys
-        .map(kn => col(s"q.$kn") === col(s"l.$kn"))
-        .reduce(_ && _) && $"q.idx" =!= $"l.idx"
-      qSide
-        .as("q")
-        .join(lSide.as("l"), pairCond)
-        .select(
-          (keys.map(kn => col(s"q.$kn").as(kn)) ++ Seq(
-            $"q.idx".as("pred_idx"),
-            $"q.tgt".as("actual"),
-            $"l.idx".as("lib_idx"),
-            $"l.tgt".as("lib_tgt"),
-            distExpr.as("dist"),
-            $"q.rank_arr".as("__q_arr"),
-            $"l.rank_arr".as("__l_arr")
-          )): _*
-        )
-        // expand to (pair, sample) rows and filter membership right after
-        // the generator. A higher-order filter() over the sequence BEFORE
-        // exploding generated strictly fewer rows but measured ~30% slower
-        // end-to-end: ArrayFilter's lambda is interpreted-only, which
-        // ejects the whole join+generate stage from whole-stage codegen.
-        // Explode + top-level element_at + Filter all stay codegen'd. The
-        // per-point rank array has one entry per sample, so its size IS
-        // numSamples — no driver action needed.
-        .withColumn("sample_id", explode(sequence(lit(1L), size($"__q_arr").cast("long"))))
-        .withColumn("q_rank", element_at($"__q_arr", $"sample_id".cast("int")))
-        .withColumn("l_rank", element_at($"__l_arr", $"sample_id".cast("int")))
-        .filter(
-          $"l_rank" < $"q_rank" && $"l_rank" <= lit(maxLib.toLong) &&
-            $"q_rank" > lit(minLib.toLong)
-        )
-        .drop("__q_arr", "__l_arr")
-    }
+      pairSelect(Knn.join(rel.filter($"rank" > lit(minLib.toLong)), rel, keys, joinCondBase))
 
     def buildBucketed(stats: DataFrame): DataFrame = {
       // series-count-proportional: AQE may broadcast
@@ -369,9 +275,7 @@ object CcmPipeline {
       }
       val bucketJoin = joinCondBase &&
         $"l.bucket" === $"q.probe" && $"l.bucket2" === $"q.probe2"
-      val enPairs = pairSelect(
-        enQ.as("q").filter($"q.rank" > lit(minLib.toLong)).join(en.as("l"), bucketJoin)
-      )
+      val enPairs = pairSelect(Knn.join(enQ.filter($"rank" > lit(minLib.toLong)), en, keys, bucketJoin))
       val disPairs = exactPairs(
         withStats
           .filter(!$"__on")
@@ -381,8 +285,7 @@ object CcmPipeline {
     }
 
     val pairsOnce =
-      if (!useBuckets && reuseDistances) reusePairs(rankedDf)
-      else if (!useBuckets) exactPairs(rdf)
+      if (!useBuckets) exactPairs(rdf)
       else {
         val stats = rdf
           .filter($"sample_id" === 1)
@@ -413,50 +316,15 @@ object CcmPipeline {
       .filter($"l_rank" <= $"lib_size" && $"q_rank" > $"lib_size")
       .drop("q_rank", "l_rank")
 
-    // Fused tail (SURVEY §4 item 1, see [[FusedKnn]]): one aggregate
-    // replaces window-topk + window-min + groupBy — one exchange instead
-    // of two, no sort. Values are bit-identical to the window tail below
-    // (ccm_boot_fused shares ccm_boot's oracle as the standing proof).
-    if (fusedTopK) {
-      val kCol =
-        if (minLib >= e + 1) lit(e + 1) else least(lit(e + 1), $"lib_size").cast("int")
-      return pairs
-        .groupBy((cellKeys ++ Seq(col("pred_idx"), col("actual"))): _*)
-        .agg(FusedKnn.predict($"dist", $"lib_idx", $"lib_tgt", kCol).as("predicted"))
-    }
-
     // top-k neighbors, k = min(E+1, L)  (`lib/ccm.ex:147-149`). When every
-    // lib size is >= E+1 (the usual case) the limit is the LITERAL e+1,
-    // which lets InferWindowGroupLimit rewrite the rank filter into a
-    // partial+final per-partition TopK (map-side k-row heap BEFORE the
-    // shuffle); a non-foldable `least(e+1, lib_size)` limit would keep the
-    // full pair relation flowing through the exchange.
-    val wNN = Window
-      .partitionBy((cellKeys :+ col("pred_idx")): _*)
-      .orderBy($"dist".asc, $"lib_idx".asc)
+    // lib size is >= E+1 (the usual case) the limit is the LITERAL e+1 and
+    // the TopK runs map-side (see [[Knn.nearest]]).
+    val query = cellKeys :+ col("pred_idx")
     val kLimit: Column =
       if (minLib >= e + 1) lit(e + 1) else least(lit(e + 1), $"lib_size")
-    val nn = pairs
-      .withColumn("nn_rank", row_number().over(wNN))
-      .filter($"nn_rank" <= kLimit)
-
-    // weights (`lib/ccm.ex:246-262`) + weighted prediction (`ccm.ex:168-175`).
-    // graft_exp is the codegen'd IEEE-only exp series (ExactMath.exp) —
-    // bit-identical to the oracle's ExactExp.duck tree by construction,
-    // retiring the libm class waiver on the engine's hottest kernel.
-    val wMin = Window.partitionBy((cellKeys :+ col("pred_idx")): _*)
-    val weighted = nn
-      .withColumn("min_dist", min($"dist").over(wMin))
-      .withColumn(
-        "w",
-        when($"dist" < 1e-12, 1.0).otherwise(expr("graft_exp((- dist) / (min_dist + 1e-8D))"))
-      )
-    if (!orderFreeFold)
-      weighted
-        .groupBy((cellKeys ++ Seq(col("pred_idx"), col("actual"))): _*)
-        .agg(sum($"w").as("sw"), sum($"w" * $"lib_tgt").as("swt"))
-        .withColumn("predicted", when($"sw" === 0.0, 0.0).otherwise($"swt" / $"sw"))
-        .drop("sw", "swt")
+    val weighted = Knn.weighted(Knn.nearest(pairs, query, kLimit), query)
+    val group = query :+ col("actual")
+    if (!orderFreeFold) Knn.average(weighted, group, "lib_tgt", "predicted")
     else
       // ORDER-FREE publication fold (round 15, closing the float ledger
       // for ccm_knn_predict's raw `predicted` output): each of the k
@@ -470,7 +338,7 @@ object CcmPipeline {
       // with measured boundary clearance); this variant is for gates
       // publishing the per-point prediction itself.
       weighted
-        .groupBy((cellKeys ++ Seq(col("pred_idx"), col("actual"))): _*)
+        .groupBy(group: _*)
         .agg(
           // w in [0, 1]; the grid strings are single-sourced with the
           // oracle via graft.contract.GridRound
@@ -494,15 +362,12 @@ object CcmPipeline {
       numSamples: Int,
       e: Int,
       knnBuckets: Int = 0,
-      knnAutoFactor: Int = 64,
-      reuseDistances: Boolean = false,
-      fusedTopK: Boolean = false
+      knnAutoFactor: Int = 64
   ): DataFrame = {
     val spark = rankedDf.sparkSession
-    graft.functions.GraftFunctions.register(spark) // graft_exp weight kernel
     import spark.implicits._
     val k = keys.map(col)
-    skillCells(rankedDf, keys, libSizes, numSamples, e, knnBuckets, knnAutoFactor, reuseDistances, fusedTopK)
+    skillCells(rankedDf, keys, libSizes, numSamples, e, knnBuckets, knnAutoFactor)
       .groupBy((k :+ col("lib_size")): _*)
       .agg(avg($"rho_cell").as("rho"))
   }
@@ -521,23 +386,20 @@ object CcmPipeline {
       numSamples: Int,
       e: Int,
       knnBuckets: Int = 0,
-      knnAutoFactor: Int = 64,
-      reuseDistances: Boolean = false,
-      fusedTopK: Boolean = false
+      knnAutoFactor: Int = 64
   ): DataFrame = {
     val spark = rankedDf.sparkSession
-    graft.functions.GraftFunctions.register(spark) // graft_exp weight kernel
     import spark.implicits._
     val k = keys.map(col)
     val libs = broadcast(libSizes.toDF("lib_size"))
     val cellKeys = k ++ Seq(col("sample_id"), col("lib_size"))
-    val preds =
-      predictions(rankedDf, keys, libSizes, e, knnBuckets, knnAutoFactor, reuseDistances, fusedTopK)
-    // Pearson per cell; NULL/NaN (corr of <2 rows or zero variance) -> 0.0
-    val corrCell = preds
-      .groupBy(cellKeys: _*)
-      .agg(corr($"actual", $"predicted").as("c"))
-      .withColumn("c", when($"c".isNull || isnan($"c"), 0.0).otherwise($"c"))
+    // Pearson per cell; <2 rows, NaN or zero variance -> 0.0
+    val corrCell = Knn.pearsonOr0(
+      predictions(rankedDf, keys, libSizes, e, knnBuckets, knnAutoFactor).groupBy(cellKeys: _*),
+      $"actual",
+      $"predicted",
+      "c"
+    )
     // Complete cell grid so guard cells (libSize >= n, or empty prediction
     // set) contribute 0.0 instead of disappearing.
     val nPts = rankedDf

@@ -33,37 +33,6 @@ package graft.ccm
   * measured crossover — 67-pt series lose (ccm_curve_approx was 2.2x its
   * exact twin), ~1 260-pt series win ~2x (ccm_wide_approx).
   *
-  * `reuseDistances` (SURVEY §4 item 2): factor the exact kNN join's
-  * pair-distance computation out of the per-sample loop — each
-  * (q_idx, l_idx) distance is evaluated once per series, with
-  * per-sample library membership expanded afterwards from per-point
-  * rank arrays (zero extra shuffles). Value-identical to the default
-  * path (same expression, same membership predicates; ccm_boot /
-  * ccm_boot_reuse share one oracle). MEASURED NEGATIVE on this engine
-  * and kept opt-in as documentation: the reference's flop-count
-  * argument (Θ(S·B·n²) distance evaluations, SURVEY §4) does not
-  * transfer to a columnar codegen engine — both paths enumerate
-  * S·n-per-cell candidate rows through the join/generator, a 3-dim
-  * distance is ~free inside whole-stage codegen, and the reuse path
-  * additionally carries two S-element rank arrays through every
-  * generated row (probed 1.1-1.5x SLOWER at S=8/32, libs both far
-  * from and near n — graft.tools.BootProbe). What actually pays at
-  * scale is candidate-count reduction (`knnBuckets`), not arithmetic
-  * reuse. Exact path only (ignored when knnBuckets > 0).
-  *
-  * `fusedTopK` (SURVEY §4 item 1): replace the kNN tail's
-  * window-topk → window-min → groupBy chain with the single
-  * [[FusedKnn]] `Aggregator` (one exchange, no sort, k-capped partial
-  * buffers). Value-identical to the window tail (ccm_boot /
-  * ccm_boot_fused share one oracle). MEASURED MIXED
-  * (graft.tools.FusedProbe): LOSES 1.4-1.7x in the bootstrap-heavy
-  * regime (S=8, 66-pt series — many tiny groups, where the
-  * per-row encoder boundary of a TypedImperativeAggregate costs more
-  * than the codegen'd sort it removes) and WINS ~10-25% on long
-  * series with few samples (1 260-pt series — the pair relation per
-  * group is large, so the saved sort + second exchange dominate).
-  * Off by default; turn on for the long-series regime.
-  *
   * `consecutive` (README-parity mode): the reference's README describes
   * libraries as "L consecutive slices of the training set … each slice
   * longer than the previous, increment constant"
@@ -84,8 +53,6 @@ final case class CcmSpec(
     seed: Long = 42L,
     knnBuckets: Int = 0,
     knnAutoFactor: Int = 64,
-    reuseDistances: Boolean = false,
-    fusedTopK: Boolean = false,
     consecutive: Boolean = false
 ) {
   require(embeddingDim >= 1, "embeddingDim must be >= 1")

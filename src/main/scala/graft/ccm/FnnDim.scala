@@ -56,32 +56,21 @@ object FnnDim {
       .select(k ++ Seq((row_number().over(w) - 1).cast("long").as("idx")) ++ leadCols: _*)
       .localCheckpoint()
 
-    val spark = df.sparkSession
     val perE = (1 to maxE).map { e =>
       // rows that have the e-dim point AND the extra coordinate e{e}
       val rows = emb.filter(col(s"e$e").isNotNull)
-      val joinCond = keys.map(kn => col(s"a.$kn") === col(s"b.$kn")).reduce(_ && _) &&
-        col("a.idx") =!= col("b.idx")
-      val dist2 = (0 until e)
-        .map(j => (col(s"a.e$j") - col(s"b.e$j")) * (col(s"a.e$j") - col(s"b.e$j")))
-        .reduce(_ + _)
-      val pairs = rows
-        .as("a")
-        .join(rows.as("b"), joinCond)
+      val pairs = Knn
+        .leaveOneOut(rows, keys)
         .select(
-          (keys.map(kn => col(s"a.$kn").as(kn)) ++ Seq(
-            col("a.idx").as("idx"),
-            col("b.idx").as("nn_idx"),
-            sqrt(dist2).as("dist"),
-            abs(col(s"a.e$e") - col(s"b.e$e")).as("extra_gap")
+          (keys.map(kn => col(s"q.$kn").as(kn)) ++ Seq(
+            col("q.idx").as("idx"),
+            col("l.idx").as("lib_idx"),
+            Knn.dist(Knn.coords(e)).as("dist"),
+            abs(col(s"q.e$e") - col(s"l.e$e")).as("extra_gap")
           )): _*
         )
-      val wNN = Window
-        .partitionBy((k :+ col("idx")): _*)
-        .orderBy(col("dist").asc, col("nn_idx").asc)
-      pairs
-        .withColumn("rn", row_number().over(wNN))
-        .filter(col("rn") === 1)
+      Knn
+        .nearest(pairs, k :+ col("idx"), lit(1))
         .select(
           (k :+ lit(e).as("e") :+
             // zero-distance twins are never false; Kennel ratio otherwise

@@ -54,7 +54,6 @@ object LagCcm {
   ): DataFrame = {
     require(lags.nonEmpty, "lags must be non-empty")
     val spark = df.sparkSession
-    graft.functions.GraftFunctions.register(spark) // graft_exp weight kernel
     import spark.implicits._
     val base =
       df.select(Seq(skey.cast("long").as("skey"), x.as("x"), y.as("y")) ++ order.map(col): _*)
@@ -63,7 +62,7 @@ object LagCcm {
 
     def oneDir(src: Column, tgt: Column, dir: String): DataFrame = {
       val emb = CcmPipeline.embedded(base, Seq("skey"), ord, src, tgt, e, tau)
-      val dims = (0 until e).map(j => s"e$j")
+      val dims = Knn.coords(e)
       // localCheckpoint: rel feeds FOUR join sides (pair t/l, shifted
       // library targets, shifted actuals) — without materialization each
       // reference re-runs the capped scan + index/embedding windows
@@ -73,57 +72,33 @@ object LagCcm {
       val rel = emb
         .select((Seq(col("skey"), col("idx")) ++ dims.map(col) :+ col("tgt")): _*)
         .localCheckpoint()
-      val d2 = dims
-        .map(dn => (col(s"t.$dn") - col(s"l.$dn")) * (col(s"t.$dn") - col(s"l.$dn")))
-        .reduceLeft(_ + _)
-      val pairs = rel
-        .as("t")
-        .join(rel.as("l"), $"t.skey" === $"l.skey" && $"t.idx" =!= $"l.idx")
+      val pairs = Knn
+        .leaveOneOut(rel, Seq("skey"))
         .select(
-          $"t.skey".as("skey"),
-          $"t.idx".as("t_idx"),
-          $"l.idx".as("l_idx"),
-          sqrt(d2).as("dist")
+          $"q.skey".as("skey"),
+          $"q.idx".as("t_idx"),
+          $"l.idx".as("lib_idx"),
+          Knn.dist(dims).as("dist")
         )
-      val wNN = Window.partitionBy("skey", "t_idx").orderBy($"dist".asc, $"l_idx".asc)
-      val wMin = Window.partitionBy("skey", "t_idx")
-      val nn = pairs
-        .withColumn("rn", row_number().over(wNN))
-        .filter($"rn" <= e + 1)
-        .withColumn("min_dist", min($"dist").over(wMin))
-        .withColumn(
-          "w",
-          when($"dist" < 1e-12, 1.0).otherwise(expr("graft_exp((- dist) / (min_dist + 1e-8D))"))
-        )
-        .select($"skey", $"t_idx", $"l_idx", $"w")
+      val query = Seq($"skey", $"t_idx")
+      val nn = Knn
+        .weighted(Knn.nearest(pairs, query, lit(e + 1)), query)
+        .select($"skey", $"t_idx", $"lib_idx", $"w")
       // lag fan-out on the k-row neighbor relation; shifted targets come
       // from the embedded relation itself via (skey, idx + lag)
       val libT = rel.select($"skey".as("lskey"), $"idx".as("li"), $"tgt".as("lt"))
       val actT = rel.select($"skey".as("askey"), $"idx".as("ai"), $"tgt".as("act"))
       val fanned = nn.crossJoin(lagDf)
-      val summed = fanned
-        .join(libT, fanned("skey") === libT("lskey") && fanned("l_idx") + fanned("lag") === libT("li"))
-        .groupBy($"skey", $"lag", $"t_idx")
-        .agg(sum($"w").as("sw"), sum($"w" * $"lt").as("swt"))
+      val summed = Knn.weightSums(
+        fanned.join(libT, fanned("skey") === libT("lskey") && fanned("lib_idx") + fanned("lag") === libT("li")),
+        Seq($"skey", $"lag", $"t_idx"),
+        "lt"
+      )
       val preds = summed
         .join(actT, summed("skey") === actT("askey") && summed("t_idx") + summed("lag") === actT("ai"))
-        .withColumn("pred", when($"sw" === 0.0, 0.0).otherwise($"swt" / $"sw"))
-      preds
-        .groupBy($"skey", $"lag")
-        .agg(
-          covar_samp($"act", $"pred").as("cv"),
-          stddev_samp($"act").as("s1"),
-          stddev_samp($"pred").as("s2")
-        )
-        .withColumn(
-          "rho",
-          when(
-            $"cv".isNull || $"s1".isNull || $"s2".isNull ||
-              isnan($"cv") || isnan($"s1") || isnan($"s2") ||
-              $"s1" === 0.0 || $"s2" === 0.0,
-            0.0
-          ).otherwise($"cv" / ($"s1" * $"s2"))
-        )
+        .withColumn("pred", Knn.averageOf("lt"))
+      Knn
+        .pearsonOr0(preds.groupBy($"skey", $"lag"), $"act", $"pred", "rho")
         .select($"skey", lit(dir).as("direction"), $"lag", (round($"rho", 6) + lit(0.0)).as("rho"))
     }
 

@@ -66,7 +66,6 @@ object Multiview {
       k: Int = 3,
       topViews: Int = 3
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(series.sparkSession) // graft_exp weight kernel
     val w = Window.partitionBy("skey").orderBy(order.map(col): _*)
     val maxLag = lags.max
     val lagged = series
@@ -91,61 +90,37 @@ object Multiview {
         )
       }
       .reduce(_ unionByName _)
-    val pairs = emb
-      .as("q")
-      .join(
-        emb.as("l"),
-        col("q.skey") === col("l.skey") && col("q.view") === col("l.view") &&
-          col("q.idx") =!= col("l.idx")
-      )
+    val pairs = Knn
+      .leaveOneOut(emb, Seq("skey", "view"))
       .select(
         col("q.skey").as("skey"),
         col("q.view").as("view"),
         col("q.idx").as("q_idx"),
         col("q.x").as("actual"),
-        col("l.idx").as("l_idx"),
+        col("l.idx").as("lib_idx"),
         col("l.x").as("lib_x"),
-        sqrt(
-          (col("q.c0") - col("l.c0")) * (col("q.c0") - col("l.c0")) +
-            (col("q.c1") - col("l.c1")) * (col("q.c1") - col("l.c1"))
-        ).as("dist")
+        Knn.dist(Seq("c0", "c1")).as("dist")
       )
-    val wq = Window.partitionBy("skey", "view", "q_idx")
-    val knn = pairs
-      .withColumn("rk", row_number().over(wq.orderBy(col("dist").asc, col("l_idx").asc)))
-      .filter(col("rk") <= k)
-    val weighted = knn
-      .withColumn("dmin", min(col("dist")).over(wq))
-      .withColumn(
-        "wt",
-        when(col("dist") < 1e-12, 1.0).otherwise(expr("graft_exp((- dist) / (dmin + 1e-8D))"))
-      )
-    val preds = weighted
-      .groupBy("skey", "view", "q_idx")
-      .agg(
-        first(col("actual")).as("actual"),
-        sum(col("wt")).as("sw"),
-        sum(col("wt") * col("lib_x")).as("swx")
-      )
-      .withColumn("pred", when(col("sw") === 0.0, 0.0).otherwise(col("swx") / col("sw")))
+    val query = Seq(col("skey"), col("view"), col("q_idx"))
+    val nn = Knn.weighted(Knn.nearest(pairs, query, lit(k)), query)
+    val preds = Knn
+      .average(nn, query :+ col("actual"), "lib_x", "pred")
       .localCheckpoint() // consumed by the view ranking AND the mv average
-    val viewSkill = preds
-      .groupBy("skey", "view")
-      .agg(round(coalesce(corr(col("actual"), col("pred")), lit(0.0)), 6).as("rho6"))
+    val viewSkill = Knn
+      .pearsonOr0(preds.groupBy("skey", "view"), col("actual"), col("pred"), "rho6")
+      .withColumn("rho6", round(col("rho6"), 6))
       .withColumn(
         "vrk",
         row_number().over(Window.partitionBy("skey").orderBy(col("rho6").desc, col("view").asc))
       )
     val top = viewSkill.filter(col("vrk") <= topViews)
-    val mv = preds
+    val mvPreds = preds
       .join(top.select("skey", "view"), Seq("skey", "view"))
       .groupBy("skey", "q_idx")
       .agg(first(col("actual")).as("actual"), avg(col("pred")).as("mv_pred"))
-      .groupBy("skey")
-      .agg(
-        count(lit(1)).as("n_pts"),
-        round(coalesce(corr(col("actual"), col("mv_pred")), lit(0.0)), 6).as("mv_rho")
-      )
+    val mv = Knn
+      .pearsonOr0(mvPreds.groupBy("skey"), col("actual"), col("mv_pred"), "mv_rho", count(lit(1)).as("n_pts"))
+      .withColumn("mv_rho", round(col("mv_rho"), 6))
     val summary = top
       .groupBy("skey")
       .agg(

@@ -51,7 +51,6 @@ object Simplex {
       tp: Int = 1
   ): DataFrame = {
     require(maxE >= 1 && tau >= 1 && tp >= 1, "maxE, tau, tp must be >= 1")
-    graft.functions.GraftFunctions.register(df.sparkSession) // graft_exp weight kernel
     val k = keys.map(col)
     val w = Window.partitionBy(k: _*).orderBy(order: _*)
     // one pass materializes every coordinate any E needs: e0..e{maxE-1}
@@ -70,59 +69,30 @@ object Simplex {
 
     val perE = (1 to maxE).map { e =>
       val rows = emb.filter(col(s"e${e - 1}").isNotNull && col(s"f$e").isNotNull)
-      val joinCond = keys.map(kn => col(s"t.$kn") === col(s"i.$kn")).reduce(_ && _) &&
-        col("t.idx") =!= col("i.idx")
-      val dist2 = (0 until e)
-        .map(j => (col(s"t.e$j") - col(s"i.e$j")) * (col(s"t.e$j") - col(s"i.e$j")))
-        .reduce(_ + _)
-      val pairs = rows
-        .as("t")
-        .join(rows.as("i"), joinCond)
+      val pairs = Knn
+        .leaveOneOut(rows, keys)
         .select(
-          (keys.map(kn => col(s"t.$kn").as(kn)) ++ Seq(
-            col("t.idx").as("t_idx"),
-            col("t.f" + e).as("actual"),
-            col("i.idx").as("i_idx"),
-            col("i.f" + e).as("i_f"),
-            sqrt(dist2).as("dist")
+          (keys.map(kn => col(s"q.$kn").as(kn)) ++ Seq(
+            col("q.idx").as("t_idx"),
+            col("q.f" + e).as("actual"),
+            col("l.idx").as("lib_idx"),
+            col("l.f" + e).as("i_f"),
+            Knn.dist(Knn.coords(e)).as("dist")
           )): _*
         )
-      // top-(E+1) with a LITERAL limit — InferWindowGroupLimit applies
-      val wNN = Window.partitionBy((k :+ col("t_idx")): _*).orderBy(col("dist").asc, col("i_idx").asc)
-      val nn = pairs.withColumn("rn", row_number().over(wNN)).filter(col("rn") <= e + 1)
-      val wMin = Window.partitionBy((k :+ col("t_idx")): _*)
-      nn.withColumn("min_dist", min(col("dist")).over(wMin))
-        .withColumn(
-          "wgt",
-          when(col("dist") < 1e-12, 1.0)
-            .otherwise(expr("graft_exp((- dist) / (min_dist + 1e-8D))"))
-        )
-        .groupBy((k ++ Seq(col("t_idx"), col("actual"))): _*)
-        .agg(sum(col("wgt")).as("sw"), sum(col("wgt") * col("i_f")).as("swt"))
-        .select(
-          (k :+ lit(e).as("e") :+ col("actual") :+
-            when(col("sw") === 0.0, 0.0).otherwise(col("swt") / col("sw")).as("pred")): _*
-        )
+      val query = k :+ col("t_idx")
+      val nn = Knn.weighted(Knn.nearest(pairs, query, lit(e + 1)), query)
+      Knn
+        .average(nn, query :+ col("actual"), "i_f", "pred")
+        .select((k :+ lit(e).as("e") :+ col("actual") :+ col("pred")): _*)
     }
-    perE
-      .reduce(_ unionByName _)
-      .groupBy((k :+ col("e")): _*)
-      .agg(
-        count(lit(1)).as("n_pred"),
-        covar_samp(col("actual"), col("pred")).as("cv"),
-        stddev_samp(col("actual")).as("s1"),
-        stddev_samp(col("pred")).as("s2")
-      )
-      // guarded Pearson — ANSI corr() throws on zero variance (the Smap
-      // lesson); degenerate groups take the C9 convention rho = 0.0
-      .withColumn(
+    Knn
+      .pearsonOr0(
+        perE.reduce(_ unionByName _).groupBy((k :+ col("e")): _*),
+        col("actual"),
+        col("pred"),
         "rho",
-        when(
-          col("cv").isNull || col("s1").isNull || col("s2").isNull ||
-            isnan(col("cv")) || isnan(col("s1")) || isnan(col("s2")) ||
-            col("s1") === 0.0 || col("s2") === 0.0,
-          0.0
-        ).otherwise(col("cv") / (col("s1") * col("s2")))
+        count(lit(1)).as("n_pred")
       )
       .select((k :+ col("e") :+ col("n_pred") :+ (round(col("rho"), 6) + lit(0.0)).as("rho")): _*)
   }
@@ -144,7 +114,6 @@ object Simplex {
       tau: Int = 1
   ): DataFrame = {
     require(e >= 1 && tau >= 1 && maxTp >= 1, "e, tau, maxTp must be >= 1")
-    graft.functions.GraftFunctions.register(df.sparkSession) // graft_exp weight kernel
     val k = keys.map(col)
     val w = Window.partitionBy(k: _*).orderBy(order: _*)
     val leadCols = (0 until e).map { j =>
@@ -158,63 +127,34 @@ object Simplex {
       .filter(col(s"f$maxTp").isNotNull)
       .localCheckpoint()
 
-    val joinCond = keys.map(kn => col(s"t.$kn") === col(s"i.$kn")).reduce(_ && _) &&
-      col("t.idx") =!= col("i.idx")
-    val dist2 = (0 until e)
-      .map(j => (col(s"t.e$j") - col(s"i.e$j")) * (col(s"t.e$j") - col(s"i.e$j")))
-      .reduce(_ + _)
-    val pairs = emb
-      .as("t")
-      .join(emb.as("i"), joinCond)
+    val pairs = Knn
+      .leaveOneOut(emb, keys)
       .select(
-        (keys.map(kn => col(s"t.$kn").as(kn)) ++ Seq(
-          col("t.idx").as("t_idx"),
-          col("i.idx").as("i_idx"),
-          sqrt(dist2).as("dist")
+        (keys.map(kn => col(s"q.$kn").as(kn)) ++ Seq(
+          col("q.idx").as("t_idx"),
+          col("l.idx").as("lib_idx"),
+          Knn.dist(Knn.coords(e)).as("dist")
         ) ++ (1 to maxTp).flatMap(t =>
-          Seq(col(s"t.f$t").as(s"tf$t"), col(s"i.f$t").as(s"if$t"))
+          Seq(col(s"q.f$t").as(s"tf$t"), col(s"l.f$t").as(s"if$t"))
         )): _*
       )
-    val wNN = Window.partitionBy((k :+ col("t_idx")): _*).orderBy(col("dist").asc, col("i_idx").asc)
-    val nn = pairs.withColumn("rn", row_number().over(wNN)).filter(col("rn") <= e + 1)
-    val wMin = Window.partitionBy((k :+ col("t_idx")): _*)
-    val weighted = nn
-      .withColumn("min_dist", min(col("dist")).over(wMin))
-      .withColumn(
-        "wgt",
-        when(col("dist") < 1e-12, 1.0)
-          .otherwise(expr("graft_exp((- dist) / (min_dist + 1e-8D))"))
-      )
+    val query = k :+ col("t_idx")
+    val nn = Knn.weighted(Knn.nearest(pairs, query, lit(e + 1)), query)
     // ONE aggregation carries every horizon as a column pair (actual via
     // group key, weighted neighbor sum via agg) ...
-    val sums = weighted
-      .groupBy((k ++ Seq(col("t_idx")) ++ (1 to maxTp).map(t => col(s"tf$t"))): _*)
-      .agg(
-        sum(col("wgt")).as("sw"),
-        (1 to maxTp).map(t => sum(col("wgt") * col(s"if$t")).as(s"swt$t")): _*
-      )
+    val horizons = 1 to maxTp
+    val sums = Knn.weightSums(nn, query ++ horizons.map(t => col(s"tf$t")), horizons.map(t => s"if$t"): _*)
     // ... then unpivots in-stage (stack generator — no shuffle, no per-tp
     // re-join) to (tp, actual, pred) rows
-    val stackExpr = (1 to maxTp)
-      .map(t => s"$t, tf$t, CASE WHEN sw = 0.0 THEN 0.0 ELSE swt$t / sw END")
-      .mkString(", ")
-    sums
-      .selectExpr(keys :+ s"stack($maxTp, $stackExpr) AS (tp, actual, pred)": _*)
-      .groupBy((k :+ col("tp")): _*)
-      .agg(
-        count(lit(1)).as("n_pred"),
-        covar_samp(col("actual"), col("pred")).as("cv"),
-        stddev_samp(col("actual")).as("s1"),
-        stddev_samp(col("pred")).as("s2")
-      )
-      .withColumn(
+    val stacked = stack(lit(maxTp) +: horizons.flatMap(t => Seq(lit(t), col(s"tf$t"), Knn.averageOf(s"if$t"))): _*)
+    val unpivoted = sums.select(k :+ stacked.as(Seq("tp", "actual", "pred")): _*)
+    Knn
+      .pearsonOr0(
+        unpivoted.groupBy((k :+ col("tp")): _*),
+        col("actual"),
+        col("pred"),
         "rho",
-        when(
-          col("cv").isNull || col("s1").isNull || col("s2").isNull ||
-            isnan(col("cv")) || isnan(col("s1")) || isnan(col("s2")) ||
-            col("s1") === 0.0 || col("s2") === 0.0,
-          0.0
-        ).otherwise(col("cv") / (col("s1") * col("s2")))
+        count(lit(1)).as("n_pred")
       )
       .select((k :+ col("tp") :+ col("n_pred") :+ (round(col("rho"), 6) + lit(0.0)).as("rho")): _*)
   }

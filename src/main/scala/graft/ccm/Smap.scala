@@ -130,16 +130,15 @@ object Smap {
       val rel = indexed
         .select(col("skey"), col("idx"), col(srcName).as("s"), col(tgtName).as("g"))
         .localCheckpoint()
-      val pairs = rel
-        .as("t")
-        .join(rel.as("i"), $"t.skey" === $"i.skey" && $"t.idx" =!= $"i.idx")
+      val pairs = Knn
+        .leaveOneOut(rel, Seq("skey"))
         .select(
-          $"t.skey".as("skey"),
-          $"t.idx".as("t_idx"),
-          $"t.s".as("ts_"),
-          $"t.g".as("tg"),
-          $"i.s".as("is_"),
-          $"i.g".as("ig")
+          $"q.skey".as("skey"),
+          $"q.idx".as("t_idx"),
+          $"q.s".as("ts_"),
+          $"q.g".as("tg"),
+          $"l.s".as("is_"),
+          $"l.g".as("ig")
         )
         .withColumn("d", abs($"is_" - $"ts_"))
       val wBar = Window.partitionBy("skey", "t_idx")
@@ -207,16 +206,15 @@ object Smap {
       val rel = indexed
         .select(col("skey"), col("idx"), col(srcName).as("s"), col(tgtName).as("g"))
         .localCheckpoint()
-      val pairs = rel
-        .as("t")
-        .join(rel.as("i"), $"t.skey" === $"i.skey" && $"t.idx" =!= $"i.idx")
+      val pairs = Knn
+        .leaveOneOut(rel, Seq("skey"))
         .select(
-          $"t.skey".as("skey"),
-          $"t.idx".as("t_idx"),
-          $"t.s".as("ts_"),
-          $"t.g".as("tg"),
-          $"i.s".as("is_"),
-          $"i.g".as("ig")
+          $"q.skey".as("skey"),
+          $"q.idx".as("t_idx"),
+          $"q.s".as("ts_"),
+          $"q.g".as("tg"),
+          $"l.s".as("is_"),
+          $"l.g".as("ig")
         )
         .withColumn("d", abs($"is_" - $"ts_"))
       // mean distance to the target's library: window aggregate on the
@@ -242,29 +240,11 @@ object Smap {
           when(abs(den) > 1e-12, ($"sw" * $"swxy" - $"swx" * $"swy") / den).otherwise(0.0)
         )
         .withColumn("pred", ($"swy" - $"bc" * $"swx") / $"sw" + $"bc" * $"ts_")
-      // Pearson from guarded co-moments rather than corr(): under ANSI
-      // mode (Spark 4 default) corr THROWS on zero variance instead of
-      // returning NaN, so the C9 degenerate→0.0 convention has to be
-      // applied BEFORE the division — a `when` guard around cv/(s1·s2)
-      // keeps the branch unevaluated on degenerate groups. (Engine-delta
-      // vs DuckDB's corr is ulp-level and absorbed by the 6-dp round,
-      // like every other aggregation-order delta in this family.)
-      preds
-        .groupBy($"skey", $"theta")
-        .agg(
-          covar_samp($"tg", $"pred").as("cv"),
-          stddev_samp($"tg").as("s1"),
-          stddev_samp($"pred").as("s2")
-        )
-        .withColumn(
-          "rho",
-          when(
-            $"cv".isNull || $"s1".isNull || $"s2".isNull ||
-              isnan($"cv") || isnan($"s1") || isnan($"s2") ||
-              $"s1" === 0.0 || $"s2" === 0.0,
-            0.0
-          ).otherwise($"cv" / ($"s1" * $"s2"))
-        )
+      // Engine delta of the co-moment Pearson vs DuckDB's corr is
+      // ulp-level and absorbed by the 6-dp round, like every other
+      // aggregation-order delta in this family.
+      Knn
+        .pearsonOr0(preds.groupBy($"skey", $"theta"), $"tg", $"pred", "rho")
         .select($"skey", lit(dir).as("direction"), $"theta", (round($"rho", 6) + lit(0.0)).as("rho"))
     }
 
@@ -351,23 +331,13 @@ object Smap {
         .filter(col(s"v$e").isNotNull)
         .drop("s")
         .localCheckpoint()
-      val pairs = emb
-        .as("t")
-        .join(emb.as("i"), $"t.skey" === $"i.skey" && $"t.idx" =!= $"i.idx")
+      val pairs = Knn
+        .leaveOneOut(emb, Seq("skey"))
         .select(
-          Seq($"t.skey".as("skey"), $"t.idx".as("t_idx"), $"t.g".as("tg"), $"i.g".as("ig")) ++
-            (1 to e).map(j => col(s"t.v$j").as(s"tv$j")) ++
-            (1 to e).map(j => col(s"i.v$j").as(s"iv$j")): _*
-        )
-        // (iv-tv)*(iv-tv), not pow(): the oracle replays the identical
-        // multiply so the only cross-engine delta is aggregation order
-        .withColumn(
-          "d",
-          sqrt(
-            (1 to e)
-              .map(j => (col(s"iv$j") - col(s"tv$j")) * (col(s"iv$j") - col(s"tv$j")))
-              .reduce(_ + _)
-          )
+          Seq($"q.skey".as("skey"), $"q.idx".as("t_idx"), $"q.g".as("tg"), $"l.g".as("ig")) ++
+            (1 to e).map(j => col(s"q.v$j").as(s"tv$j")) ++
+            (1 to e).map(j => col(s"l.v$j").as(s"iv$j")) :+
+            Knn.dist((1 to e).map(j => s"v$j")).as("d"): _*
         )
       val wBar = Window.partitionBy("skey", "t_idx")
       val weighted = pairs
@@ -379,23 +349,8 @@ object Smap {
       val aggs = momentAggs(e)
       val sums = weighted.groupBy(groupCols: _*).agg(aggs.head, aggs.tail: _*)
       val preds = sums.withColumn("pred", expr(predExpr))
-      // guarded Pearson — same C9 degenerate→0.0 convention as the E=1 path
-      preds
-        .groupBy($"skey", $"theta")
-        .agg(
-          covar_samp($"tg", $"pred").as("cv"),
-          stddev_samp($"tg").as("s1"),
-          stddev_samp($"pred").as("s2")
-        )
-        .withColumn(
-          "rho",
-          when(
-            $"cv".isNull || $"s1".isNull || $"s2".isNull ||
-              isnan($"cv") || isnan($"s1") || isnan($"s2") ||
-              $"s1" === 0.0 || $"s2" === 0.0,
-            0.0
-          ).otherwise($"cv" / ($"s1" * $"s2"))
-        )
+      Knn
+        .pearsonOr0(preds.groupBy($"skey", $"theta"), $"tg", $"pred", "rho")
         .select($"skey", lit(dir).as("direction"), $"theta", (round($"rho", 6) + lit(0.0)).as("rho"))
     }
 

@@ -3,7 +3,7 @@ package graft.contract
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ccm.{Ccm, CcmPipeline, CcmSpec, DetHash, FftLadder, FftSurrogate, Generators, LagCcm, Simplex, Smap}
+import graft.ccm.{Ccm, CcmPipeline, CcmSpec, DetHash, FftLadder, FftSurrogate, Generators, Knn, LagCcm, Simplex, Smap}
 
 /** Driver-contract queries for the CCM operator family (SURVEY.md §2a),
   * each paired with ANSI/DuckDB oracle SQL over the same parquet tables.
@@ -214,15 +214,10 @@ object CcmQueries {
   // -------------------------------------------------------------------
   private def skillCorr(s: SparkSession, dir: String): DataFrame = {
     val rk = CcmPipeline.ranked(embValue(s, dir), Seq("user_id"), 2, Seed, col("user_id")).localCheckpoint()
-    CcmPipeline
-      .predictions(rk, Seq("user_id"), Seq(40), 3)
-      .groupBy("user_id", "sample_id")
-      .agg(corr(col("actual"), col("predicted")).as("c"))
-      .select(
-        col("user_id"),
-        col("sample_id"),
-        Norm.rnd(when(col("c").isNull || isnan(col("c")), 0.0).otherwise(col("c")), 6).as("rho")
-      )
+    val preds = CcmPipeline.predictions(rk, Seq("user_id"), Seq(40), 3)
+    Knn
+      .pearsonOr0(preds.groupBy("user_id", "sample_id"), col("actual"), col("predicted"), "rho")
+      .withColumn("rho", Norm.rnd(col("rho"), 6))
       .transform(Norm.ordered(_, col("user_id"), col("sample_id")))
   }
 
@@ -699,18 +694,10 @@ object CcmQueries {
   private val wide4ApproxSql: String = wideSqlWith(Some(WideBuckets), Wide4E, Wide4SeriesMod)
 
   // -------------------------------------------------------------------
-  // ccm_boot / ccm_boot_reuse — the bootstrap-heavy regime (the
-  // reference's own default shape, `lib/ccm.ex:7`: num_samples 100 with
-  // the auto-ladder reaching the full series length) that motivated
-  // distance-reuse across samples (SURVEY §4 item 2,
-  // CcmSpec.reuseDistances). Series are capped at BootCap points so the
-  // workload sits in the heavy-library-overlap regime at every SF. Both
-  // entries produce identical values — ccm_boot runs the per-sample
-  // exact join, ccm_boot_reuse the factored pair-distance relation —
-  // and share one oracle, so the hash compare is the equality proof
-  // and the bench delta the honest measurement: reuse is the SLOWER
-  // path on this engine (see CcmSpec.reuseDistances scaladoc for why),
-  // and the pair documents that finding per-round.
+  // ccm_boot — the bootstrap-heavy regime (the reference's own default
+  // shape, `lib/ccm.ex:7`: num_samples 100 with the auto-ladder reaching
+  // the full series length). Series are capped at BootCap points so the
+  // workload sits in the heavy-library-overlap regime at every SF.
   // -------------------------------------------------------------------
   private val BootSamples = 8
   private val BootLibs = Seq(16, 32, 48)
@@ -736,7 +723,8 @@ object CcmQueries {
       .filter(col("y").isNotNull)
   }
 
-  private def bootWith(s: SparkSession, dir: String, spec: CcmSpec): DataFrame =
+  private val bootSpec = CcmSpec(numSamples = BootSamples, seed = Seed)
+  private def boot(s: SparkSession, dir: String): DataFrame =
     Ccm
       .bidirectional(
         bootInput(s, dir),
@@ -744,7 +732,7 @@ object CcmQueries {
         order = Seq("ts"),
         x = col("x"),
         y = col("y"),
-        spec = spec,
+        spec = bootSpec,
         libSizes = BootLibs
       )
       .select(
@@ -756,18 +744,6 @@ object CcmQueries {
         col("convergent")
       )
       .transform(Norm.ordered(_, col("user_id"), col("direction"), col("lib_size")))
-
-  private val bootSpec = CcmSpec(numSamples = BootSamples, seed = Seed)
-  private def boot(s: SparkSession, dir: String): DataFrame = bootWith(s, dir, bootSpec)
-  private def bootReuse(s: SparkSession, dir: String): DataFrame =
-    bootWith(s, dir, bootSpec.copy(reuseDistances = true))
-
-  // ccm_boot_fused — same workload through the FusedKnn aggregate tail
-  // (SURVEY §4 item 1, CcmSpec.fusedTopK): third member of the shared-
-  // oracle family; the hash compare proves value equality with the
-  // window tail, the bench delta is the per-round measurement.
-  private def bootFused(s: SparkSession, dir: String): DataFrame =
-    bootWith(s, dir, bootSpec.copy(fusedTopK = true))
 
   private val bootSql: String = {
     val capFrom =
@@ -2580,8 +2556,6 @@ object CcmQueries {
     "ccm_wide4_approx" -> wide4Approx,
     "ccm_boot" -> boot,
     "ccm_boot_ci" -> bootCi,
-    "ccm_boot_reuse" -> bootReuse,
-    "ccm_boot_fused" -> bootFused,
     "ccm_convergence" -> convergenceQ,
     "ccm_gen_logistic" -> genLogistic,
     "ccm_gen_coupled" -> genCoupled,
@@ -2625,8 +2599,6 @@ object CcmQueries {
     "ccm_wide4_approx" -> wide4ApproxSql,
     "ccm_boot" -> bootSql,
     "ccm_boot_ci" -> bootCiSql,
-    "ccm_boot_reuse" -> bootSql,
-    "ccm_boot_fused" -> bootSql,
     "ccm_convergence" -> convergenceSql,
     "ccm_gen_logistic" -> genLogisticSql,
     "ccm_gen_coupled" -> genCoupledSql,

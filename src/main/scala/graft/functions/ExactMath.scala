@@ -12,7 +12,7 @@ package graft.functions
   *       HOF text runs interpreted lambdas per row; a static call stays
   *       inside whole-stage codegen), and
   *   (b) JVM-side twins that must stay bit-identical to the SQL
-  *       pipelines ([[graft.ccm.FusedKnn]], [[graft.ccm.CcmLocal]]).
+  *       pipelines ([[graft.ccm.CcmLocal]]).
   *
   * EVERY operation below mirrors the SQL texts' order exactly —
   * `ExactSeriesSpec` pins bit-equality of all three emissions on a

@@ -52,6 +52,12 @@ class MultiviewSpec extends SparkTestBase {
     assert(math.abs(mvRho) < 0.35, s"independent series should have low skill, got $mvRho")
   }
 
+  test("a constant target scores 0.0 skill instead of throwing on zero variance") {
+    val (_, ys) = Generators.coupledLogisticMaps(80, coupling = 0.3)
+    val (_, _, bestRho, _, mvRho) = run(Array.fill(80)(0.25), ys)(1L)
+    assert(bestRho == 0.0 && mvRho == 0.0, s"best_rho $bestRho, mv_rho $mvRho")
+  }
+
   test("view ranking is deterministic across repeated runs") {
     val (xs, ys) = Generators.coupledLogisticMaps(120, coupling = 0.3)
     val r1 = run(ys, xs)(1L)

@@ -10,7 +10,7 @@ import graft.functions.{ExactMath, GraftFunctions}
   * Each series has THREE emissions that must be bit-identical:
   * the Spark HOF text (ExactExp.spark / ExactLn.spark), the codegen'd
   * expression (graft_exp / graft_ln → ExactMath), and the JVM method
-  * itself (used by FusedKnn / CcmLocal). The DuckDB text is the same
+  * itself (used by CcmLocal). The DuckDB text is the same
   * operation tree as the HOF text by construction (ExactLn precedent,
   * confirmed by every oracle run), so pinning HOF == codegen == JVM
   * closes the loop: any emission drifting from the shared op order

@@ -58,6 +58,14 @@ class NewQueryPlanSpec extends SparkTestBase {
     assert(limits >= 8, s"expected partial+final WindowGroupLimit per E (>=8), got $limits")
   }
 
+  test("ccm_fnn_dim prunes each per-E top-1 map-side before its exchange") {
+    val p = plan("ccm_fnn_dim")
+    // 4 E values, each with a partial and a final WindowGroupLimit
+    val partial = "WindowGroupLimit .*Partial".r.findAllIn(p).size
+    val fin = "WindowGroupLimit .*Final".r.findAllIn(p).size
+    assert(partial >= 4 && fin >= 4, s"expected partial+final WindowGroupLimit per E, got $partial partial, $fin final")
+  }
+
   test("text_para_dedup is one explode + one hash-partition window: no join anywhere") {
     val p = plan("text_para_dedup")
     assert(!p.contains("Join"), "paragraph dedup must not join — it is the exact-dedup shuffle shape")
